@@ -27,6 +27,9 @@ Quirks preserved on purpose (each cited):
 
 from __future__ import annotations
 
+from functools import lru_cache
+from typing import Tuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -176,13 +179,13 @@ def legacy_field(fmap: Column, key: str, kind: str) -> Column:
     return F.when(value.isNull(), F.lit(0.0)).otherwise(js_parsefloat_or_zero(value))
 
 
-def extract_record(extracted: DataFrame, mode: str = "typed") -> DataFrame:
-    """EXTRACT_SCHEMA rows → + ``meta_string`` + the 22 record columns.
-
-    Pure select over ``meta_items``; no shuffle, no Python.
-    """
+@lru_cache(maxsize=None)
+def _record_columns(legacy: bool) -> Tuple[Column, Column, Tuple[Column, ...]]:
+    """(meta_string, _fmap, the 22 record columns) for one mode, built
+    once per process: building them costs hundreds of py4j round trips,
+    and Columns are immutable, so every DataFrame can share them."""
     items = F.col("meta_items")
-    if mode == "legacy":
+    if legacy:
         meta = marker_item_str(items)
         fmap = record_map_legacy(meta)
         cols = [legacy_field(F.col("_fmap"), k, kind).alias(k) for k, kind in RECORD_FIELDS]
@@ -190,6 +193,15 @@ def extract_record(extracted: DataFrame, mode: str = "typed") -> DataFrame:
         meta = whitetext_concat(items)
         fmap = record_map_typed(meta)
         cols = [typed_field(F.col("_fmap"), k, kind).alias(k) for k, kind in RECORD_FIELDS]
+    return meta, fmap, tuple(cols)
+
+
+def extract_record(extracted: DataFrame, mode: str = "typed") -> DataFrame:
+    """EXTRACT_SCHEMA rows → + ``meta_string`` + the 22 record columns.
+
+    Pure select over ``meta_items``; no shuffle, no Python.
+    """
+    meta, fmap, cols = _record_columns(mode == "legacy")
     base = extracted.withColumn("meta_string", meta).withColumn("_fmap", fmap)
     out = base.select("*", *cols).drop("_fmap")
     return out

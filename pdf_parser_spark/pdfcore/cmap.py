@@ -12,6 +12,7 @@ Replaces the glyph-to-Unicode path the reference gets from pdf.js
 
 from __future__ import annotations
 
+import hashlib
 from typing import Dict, List, Optional, Tuple
 
 from .lexer import Keyword, Name, tokenize_content
@@ -103,15 +104,50 @@ def _utf16be_to_str(b: bytes) -> str:
         return b.decode("utf-16-be", errors="replace")
 
 
+def _translate_table(table: Dict[int, str]) -> Tuple[str, ...]:
+    """A ``str.translate`` table over latin-1-decoded bytes: one string
+    per byte value, U+FFFD for bytes the map does not cover."""
+    return tuple(table.get(b, "\ufffd") for b in range(256))
+
+
+_BASE_TABLES: Dict[str, Tuple[str, ...]] = {
+    name: _translate_table(table) for name, table in BASE_ENCODINGS.items()
+}
+
+
+# Executor-side memo keyed by content digest, the pattern of
+# ``fontprog._memo``: a crawl shard and every multi-page document repeat
+# the same ToUnicode streams. Bounded; the table resets per Python
+# worker process. Memoized maps are shared, so nothing mutates them.
+_MEMO_MAX = 256
+_memo: Dict[bytes, "ToUnicodeCMap"] = {}
+
+
 class ToUnicodeCMap:
-    """A parsed ToUnicode CMap: code → unicode string, 1- or 2-byte codes."""
+    """A parsed ToUnicode CMap: code → unicode string, 1- or 2-byte codes.
+
+    Instances from :meth:`parse` are shared through the memo and never
+    mutated after parsing.
+    """
 
     def __init__(self):
         self.single: Dict[int, str] = {}
-        self.code_lengths: List[int] = []  # distinct code byte-lengths seen
+        self.code_lengths: Tuple[int, ...] = ()  # distinct code byte-lengths seen
+        self.chars: Optional[Tuple[str, ...]] = None  # 1-byte code space only
 
     @classmethod
     def parse(cls, data: bytes) -> "ToUnicodeCMap":
+        key = hashlib.md5(data).digest()
+        cm = _memo.get(key)
+        if cm is None:
+            cm = cls._parse(data)
+            if len(_memo) >= _MEMO_MAX:
+                _memo.clear()
+            _memo[key] = cm
+        return cm
+
+    @classmethod
+    def _parse(cls, data: bytes) -> "ToUnicodeCMap":
         cm = cls()
         toks = list(tokenize_content(data))
         lengths = set()
@@ -162,11 +198,15 @@ class ToUnicodeCMap:
                                     )
                         i += 3
             i += 1
-        cm.code_lengths = sorted(lengths) or [1]
+        cm.code_lengths = tuple(sorted(lengths)) or (1,)
+        if cm.code_lengths == (1,):
+            cm.chars = _translate_table(cm.single)
         return cm
 
     def decode(self, raw: bytes) -> str:
         """Decode a show-string using the CMap's code lengths (greedy)."""
+        if self.chars is not None:
+            return raw.decode("latin-1").translate(self.chars)
         out: List[str] = []
         i = 0
         n = len(raw)
@@ -198,6 +238,10 @@ class FontDecoder:
     cmap+post, Type1 built-in /Encoding; see ``fontprog``) — that
     embedded map; else /Encoding /Differences over a base encoding,
     else the base/Standard encoding byte table.
+
+    Single-byte decoding is one ``str.translate`` over a table built
+    once per decoder; decoders are shared across pages and never
+    mutated after construction.
     """
 
     def __init__(
@@ -208,20 +252,21 @@ class FontDecoder:
         embedded: Optional[Dict[int, str]] = None,
     ):
         self.tounicode = tounicode
-        self.embedded = embedded
-        table = dict(BASE_ENCODINGS.get(base_encoding or "StandardEncoding", _STANDARD))
-        if differences:
-            table.update(differences)
-        self.table = table
+        if embedded is not None:
+            # symbolic fonts must not fall back to StandardEncoding —
+            # an unmapped code is unknown, not "probably ASCII"
+            self.chars = _translate_table(embedded)
+        else:
+            base = base_encoding if base_encoding in _BASE_TABLES else "StandardEncoding"
+            if differences:
+                self.chars = _translate_table({**BASE_ENCODINGS[base], **differences})
+            else:
+                self.chars = _BASE_TABLES[base]
 
     def decode(self, raw: bytes) -> str:
         if self.tounicode is not None:
             return self.tounicode.decode(raw)
-        if self.embedded is not None:
-            # symbolic fonts must not fall back to StandardEncoding —
-            # an unmapped code is unknown, not "probably ASCII"
-            return "".join(self.embedded.get(b, "�") for b in raw)
-        return "".join(self.table.get(b, "�") for b in raw)
+        return raw.decode("latin-1").translate(self.chars)
 
 
 def parse_differences(diff_array: list) -> Dict[int, str]:

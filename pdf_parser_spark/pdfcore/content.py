@@ -35,6 +35,9 @@ IDENTITY: Matrix = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 # number element is rendered as a word space
 TJ_SPACE_KERN = -200.0
 
+# decoder for a font name the page resources do not define
+_FALLBACK_DECODER = FontDecoder()
+
 
 def mat_mul(m1: Matrix, m2: Matrix) -> Matrix:
     """Compose matrices row-vector style: apply ``m1`` first, then ``m2``."""
@@ -105,13 +108,12 @@ def interpret_text(
     ctm: Matrix = IDENTITY
     gs_stack: List[Matrix] = []
     operands: List = []
-    fallback_decoder = FontDecoder()
     in_text = False
 
     def current_decoder() -> FontDecoder:
         if ts.font is not None and ts.font in fonts:
             return fonts[ts.font]
-        return fallback_decoder
+        return _FALLBACK_DECODER
 
     def glyph_transform() -> Matrix:
         g: Matrix = (ts.tfs * ts.th, 0.0, 0.0, ts.tfs, 0.0, ts.rise)

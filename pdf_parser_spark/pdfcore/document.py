@@ -102,7 +102,14 @@ def _collect_page_dicts(store: ObjectStore) -> List[dict]:
     return pages
 
 
-def _build_fonts(store: ObjectStore, resources) -> Dict[str, FontDecoder]:
+def _build_fonts(store: ObjectStore, resources, decoders: dict) -> Dict[str, FontDecoder]:
+    """Resource name → decoder for one page.
+
+    ``decoders`` is the document's cache, ``id(font dict) → (font dict,
+    decoder)``: a font dictionary shared by many pages (resolved once by
+    the store) builds its decoder once. Holding the dict keeps its id
+    from being reused for the life of the cache.
+    """
     fonts: Dict[str, FontDecoder] = {}
     res = store.resolve(resources)
     if not isinstance(res, dict):
@@ -114,35 +121,42 @@ def _build_fonts(store: ObjectStore, resources) -> Dict[str, FontDecoder]:
         fd = store.resolve(fref)
         if not isinstance(fd, dict):
             continue
-        tounicode: Optional[ToUnicodeCMap] = None
-        tu = store.resolve(fd.get("ToUnicode"))
-        if isinstance(tu, StreamObj):
-            try:
-                tounicode = ToUnicodeCMap.parse(decode_stream(tu, store.resolve))
-            except (FilterError, LexError):
-                tounicode = None
-        base_enc: Optional[str] = None
-        differences = None
-        enc = store.resolve(fd.get("Encoding"))
-        if isinstance(enc, (Name, str)):
-            base_enc = str(enc)
-        elif isinstance(enc, dict):
-            be = enc.get("BaseEncoding")
-            if be is not None:
-                base_enc = str(be)
-            diff = store.resolve(enc.get("Differences"))
-            if isinstance(diff, list):
-                differences = parse_differences(diff)
-        embedded = None
-        if tounicode is None and enc is None:
-            # no /ToUnicode and no /Encoding: the font program itself is
-            # the only source of glyph→unicode (symbolic TrueType cmap +
-            # post names, Type1 built-in /Encoding) — the pdf.js-parity
-            # path for embedded fonts. Parse failures degrade to the
-            # standard table, never to a document error.
-            embedded = _embedded_font_map(store, fd)
-        fonts[str(fname)] = FontDecoder(tounicode, base_enc, differences, embedded)
+        hit = decoders.get(id(fd))
+        if hit is None:
+            hit = decoders[id(fd)] = (fd, _build_decoder(store, fd))
+        fonts[str(fname)] = hit[1]
     return fonts
+
+
+def _build_decoder(store: ObjectStore, fd: dict) -> FontDecoder:
+    tounicode: Optional[ToUnicodeCMap] = None
+    tu = store.resolve(fd.get("ToUnicode"))
+    if isinstance(tu, StreamObj):
+        try:
+            tounicode = ToUnicodeCMap.parse(decode_stream(tu, store.resolve))
+        except (FilterError, LexError):
+            tounicode = None
+    base_enc: Optional[str] = None
+    differences = None
+    enc = store.resolve(fd.get("Encoding"))
+    if isinstance(enc, (Name, str)):
+        base_enc = str(enc)
+    elif isinstance(enc, dict):
+        be = enc.get("BaseEncoding")
+        if be is not None:
+            base_enc = str(be)
+        diff = store.resolve(enc.get("Differences"))
+        if isinstance(diff, list):
+            differences = parse_differences(diff)
+    embedded = None
+    if tounicode is None and enc is None:
+        # no /ToUnicode and no /Encoding: the font program itself is
+        # the only source of glyph→unicode (symbolic TrueType cmap +
+        # post names, Type1 built-in /Encoding) — the pdf.js-parity
+        # path for embedded fonts. Parse failures degrade to the
+        # standard table, never to a document error.
+        embedded = _embedded_font_map(store, fd)
+    return FontDecoder(tounicode, base_enc, differences, embedded)
 
 
 def _embedded_font_map(store: ObjectStore, font_dict: dict):
@@ -257,9 +271,10 @@ def parse_pdf(data: bytes, decrypt: bool = False, password: bytes = b"") -> PdfD
         raise PdfError("bad_pages", f"cannot walk pages tree: {e}") from None
 
     pages: List[PdfPage] = []
+    decoders: dict = {}  # font decoders of this document, see _build_fonts
     for i, pd in enumerate(page_dicts):
         try:
-            fonts = _build_fonts(store, pd.get("Resources"))
+            fonts = _build_fonts(store, pd.get("Resources"), decoders)
             content = _page_content_bytes(store, pd)
             items = interpret_text(content, fonts)
             pages.append(PdfPage(i, items))

@@ -8,14 +8,67 @@ This is the from-scratch replacement for the tokenizer the reference
 gets for free inside vendored pdf.js (see SURVEY.md §2.3 T5; the
 reference consumes it via ``getDocument`` at
 ``src/services/pdfParser/index.ts:23``).
+
+Scanning is done by compiled ``re`` patterns over bytes: whitespace and
+comment skips, regular-byte runs, and the common token shapes (plain
+numbers, names without ``#xx``, literal strings without escapes or
+nesting, hex strings). Only escapes are decoded one at a time.
+:func:`tokenize_content` scans a content stream with one master
+pattern and hands a token to the byte-level readers of :class:`Lexer`
+only for the shapes a regex cannot express (escaped or nested literal
+strings, ``#xx`` names, bad hex strings, dicts, arrays, malformed
+numbers, ``BI`` inline images).
 """
 
 from __future__ import annotations
 
-from typing import Any, Optional, Tuple
+import binascii
+import re
+from typing import Any, Tuple
 
 WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
+
+# regex building blocks (bytes patterns; \d is ASCII-only here). Runs
+# are possessive and the skip is atomic: a pattern never backtracks into
+# a shorter run, which would split one token in two.
+_WS_CLASS = rb"\x00\t\n\x0c\r "  # WHITESPACE inside [...]
+_DELIM_CLASS = rb"()<>\[\]{}/%"  # the delimiters inside [...]
+_REGULAR = rb"[^" + _WS_CLASS + _DELIM_CLASS + rb"]"
+_NOT_REGULAR = rb"(?!" + _REGULAR + rb")"
+_NAME_BYTES = rb"[^" + _WS_CLASS + _DELIM_CLASS + rb"#]*+"  # regular bytes except '#'
+_SKIP = rb"(?>(?:[" + _WS_CLASS + rb"]+|%[^\r\n]*)*)"  # whitespace and comments
+
+_SKIP_RE = re.compile(_SKIP)
+_REGULAR_RUN_RE = re.compile(_REGULAR + rb"*+")
+_NAME_RE = re.compile(rb"/(" + _NAME_BYTES + rb")(?!#)")
+_NAME_RUN_RE = re.compile(_NAME_BYTES)
+_LITERAL_RE = re.compile(rb"\(([^()\\]*+)\)")
+_LITERAL_RUN_RE = re.compile(rb"[^()\\]*+")
+_HEX_DIGITS = rb"[0-9A-Fa-f" + _WS_CLASS + rb"]*+"  # whitespace between digits is legal
+_HEX_RE = re.compile(rb"<(" + _HEX_DIGITS + rb")(>?)")
+# 'gen R' after a non-negative integer: the gen run is converted like
+# any number, so it is captured whole and checked by the caller
+_REF_TAIL_RE = re.compile(_SKIP + rb"(\d" + _REGULAR + rb"*+)" + _SKIP + rb"R" + _NOT_REGULAR)
+# inline-image end: 'EI' with whitespace before it and whitespace or
+# end-of-data after it
+_EI_RE = re.compile(rb"(?<=[" + _WS_CLASS + rb"])EI(?=[" + _WS_CLASS + rb"]|\Z)")
+
+# one content-stream token after optional whitespace/comments; ``other``
+# is any byte the fast shapes do not cover, handed to the Lexer
+_TOKEN_RE = re.compile(
+    _SKIP
+    + rb"(?:(?P<int>[+-]?\d++)" + _NOT_REGULAR
+    + rb"|(?P<real>[+-]?(?:\d++\.\d*+|\.\d++))" + _NOT_REGULAR
+    + rb"|(?P<kw>[^+\-.0-9" + _WS_CLASS + _DELIM_CLASS + rb"]" + _REGULAR + rb"*+)"
+    + rb"|/(?P<name>" + _NAME_BYTES + rb")(?!#)"
+    + rb"|\((?P<str>[^()\\]*+)\)"
+    + rb"|<(?P<hex>" + _HEX_DIGITS + rb")>"
+    + rb"|(?P<eof>\Z)"
+    + rb"|(?P<other>.))",
+    re.S,
+)
+_KEYWORD_CONSTANTS = {b"true": True, b"false": False, b"null": None}
+_NUMBER_START = b"+-.0123456789"
 
 
 class Name(str):
@@ -60,20 +113,28 @@ class LexError(ValueError):
     pass
 
 
-def is_ws(b: int) -> bool:
-    return b in WHITESPACE
+class Keyword(bytes):
+    """A bare keyword token (content-stream operator or ``obj`` etc.)."""
+
+    __slots__ = ()
 
 
-def is_delim(b: int) -> bool:
-    return b in DELIMITERS
-
-
-def is_regular(b: int) -> bool:
-    return not is_ws(b) and not is_delim(b)
+def _number(raw: bytes) -> Any:
+    """Convert one non-empty regular-byte run that starts like a number."""
+    try:
+        if b"." in raw or b"e" in raw or b"E" in raw:
+            return float(raw)
+        return int(raw)
+    except ValueError:
+        # PDF tolerates things like '--5' or '.'; salvage leading number
+        try:
+            return float(raw.replace(b"--", b"-"))
+        except ValueError:
+            raise LexError(f"bad number token {raw!r}") from None
 
 
 class Lexer:
-    """Byte-level scanner over a PDF buffer.
+    """Scanner over a PDF buffer.
 
     ``pos`` is a plain integer cursor; all ``read_*`` methods advance it.
     """
@@ -88,28 +149,12 @@ class Lexer:
     # ------------------------------------------------------------------
     def skip_ws(self) -> None:
         """Skip whitespace and comments (``%`` to end of line)."""
-        d, n = self.data, self.n
-        while self.pos < n:
-            b = d[self.pos]
-            if is_ws(b):
-                self.pos += 1
-            elif b == 0x25:  # '%' comment
-                while self.pos < n and d[self.pos] not in b"\r\n":
-                    self.pos += 1
-            else:
-                return
-
-    def peek(self) -> int:
-        if self.pos >= self.n:
-            raise LexError("unexpected EOF")
-        return self.data[self.pos]
+        self.pos = _SKIP_RE.match(self.data, self.pos).end()
 
     def _read_regular_run(self) -> bytes:
-        start = self.pos
-        d, n = self.data, self.n
-        while self.pos < n and is_regular(d[self.pos]):
-            self.pos += 1
-        return d[start : self.pos]
+        m = _REGULAR_RUN_RE.match(self.data, self.pos)
+        self.pos = m.end()
+        return m.group()
 
     # ------------------------------------------------------------------
     # object readers
@@ -133,52 +178,72 @@ class Lexer:
             return self.read_array()
         if b == 0x5D:  # ']'
             raise LexError("unexpected ']'")
-        if b in b"+-.0123456789":
+        if b in _NUMBER_START:
             return self.read_number_or_ref()
         # keyword
         kw = self._read_regular_run()
-        if kw == b"true":
-            return True
-        if kw == b"false":
-            return False
-        if kw == b"null":
-            return None
+        if kw in _KEYWORD_CONSTANTS:
+            return _KEYWORD_CONSTANTS[kw]
         if not kw:
             raise LexError(f"cannot lex byte {b!r} at {self.pos}")
         return Keyword(kw)
 
     def read_name(self) -> Name:
-        assert self.data[self.pos] == 0x2F
+        d = self.data
+        m = _NAME_RE.match(d, self.pos)
+        if m is not None:
+            self.pos = m.end()
+            return Name(m.group(1).decode("latin-1"))
+        # the name holds '#xx' escapes
         self.pos += 1
         out = bytearray()
-        d, n = self.data, self.n
-        while self.pos < n:
-            b = d[self.pos]
-            if not is_regular(b):
-                break
-            if b == 0x23 and self.pos + 2 < n:  # '#xx' escape
+        n = self.n
+        while True:
+            m = _NAME_RUN_RE.match(d, self.pos)
+            out += m.group()
+            self.pos = m.end()
+            if self.pos >= n or d[self.pos] != 0x23:
+                return Name(out.decode("latin-1"))
+            if self.pos + 2 < n:
                 try:
                     out.append(int(d[self.pos + 1 : self.pos + 3], 16))
                     self.pos += 3
                     continue
                 except ValueError:
                     pass
-            out.append(b)
+            out.append(0x23)
             self.pos += 1
-        return Name(out.decode("latin-1"))
 
     def read_literal_string(self) -> bytes:
-        assert self.data[self.pos] == 0x28
+        d = self.data
+        m = _LITERAL_RE.match(d, self.pos)
+        if m is not None:
+            self.pos = m.end()
+            return m.group(1)
+        # escapes or balanced nested parentheses
         self.pos += 1
         out = bytearray()
         depth = 1
-        d, n = self.data, self.n
-        while self.pos < n:
+        n = self.n
+        while True:
+            m = _LITERAL_RUN_RE.match(d, self.pos)
+            out += m.group()
+            self.pos = m.end()
+            if self.pos >= n:
+                raise LexError("unterminated literal string")
             b = d[self.pos]
-            if b == 0x5C:  # backslash escape
-                self.pos += 1
+            self.pos += 1
+            if b == 0x28:  # '('
+                depth += 1
+                out.append(b)
+            elif b == 0x29:  # ')'
+                depth -= 1
+                if depth == 0:
+                    return bytes(out)
+                out.append(b)
+            else:  # backslash escape
                 if self.pos >= n:
-                    break
+                    raise LexError("unterminated literal string")
                 e = d[self.pos]
                 if e == 0x6E:
                     out.append(0x0A)
@@ -207,43 +272,17 @@ class Lexer:
                 else:
                     out.append(e)
                 self.pos += 1
-            elif b == 0x28:
-                depth += 1
-                out.append(b)
-                self.pos += 1
-            elif b == 0x29:
-                depth -= 1
-                self.pos += 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(b)
-            else:
-                out.append(b)
-                self.pos += 1
-        raise LexError("unterminated literal string")
 
     def read_hex_string(self) -> bytes:
-        assert self.data[self.pos] == 0x3C
-        self.pos += 1
-        digits = bytearray()
-        d, n = self.data, self.n
-        while self.pos < n:
-            b = d[self.pos]
-            self.pos += 1
-            if b == 0x3E:  # '>'
-                if len(digits) % 2 == 1:
-                    digits.append(0x30)  # odd count: pad with '0'
-                return bytes.fromhex(digits.decode("ascii"))
-            if b in b"0123456789abcdefABCDEF":
-                digits.append(b)
-            elif is_ws(b):
-                continue
-            else:
-                raise LexError(f"bad hex digit {b!r}")
-        raise LexError("unterminated hex string")
+        m = _HEX_RE.match(self.data, self.pos)
+        self.pos = m.end()
+        if not m.group(2):
+            if self.pos >= self.n:
+                raise LexError("unterminated hex string")
+            raise LexError(f"bad hex digit {self.data[self.pos]!r}")
+        return _unhex(m.group(1))
 
     def read_array(self) -> list:
-        assert self.data[self.pos] == 0x5B
         self.pos += 1
         out = []
         while True:
@@ -270,12 +309,10 @@ class Lexer:
             length = d.get("Length")
             if isinstance(length, int):
                 raw = self.data[self.pos : self.pos + length]
-                end = self.pos + length
                 # verify 'endstream' follows (allow ws)
-                probe = Lexer(self.data, end)
-                probe.skip_ws()
-                if self.data[probe.pos : probe.pos + 9] == b"endstream":
-                    self.pos = probe.pos + 9
+                end = _SKIP_RE.match(self.data, self.pos + length).end()
+                if self.data[end : end + 9] == b"endstream":
+                    self.pos = end + 9
                     return StreamObj(d, raw)
             # Length missing, indirect, or wrong: scan for 'endstream'
             idx = self.data.find(b"endstream", self.pos)
@@ -293,7 +330,6 @@ class Lexer:
         return d
 
     def read_dict(self) -> dict:
-        assert self.data[self.pos : self.pos + 2] == b"<<"
         self.pos += 2
         out: dict = {}
         while True:
@@ -313,43 +349,22 @@ class Lexer:
         """Read a number; if it is ``int int R`` collapse to a Ref."""
         num = self.read_number()
         if isinstance(num, int) and num >= 0:
-            save = self.pos
-            try:
-                self.skip_ws()
-                b = self.peek()
-                if b in b"0123456789":
-                    gen = self.read_number()
-                    if isinstance(gen, int):
-                        self.skip_ws()
-                        if (
-                            self.pos < self.n
-                            and self.data[self.pos : self.pos + 1] == b"R"
-                            and (
-                                self.pos + 1 >= self.n
-                                or not is_regular(self.data[self.pos + 1])
-                            )
-                        ):
-                            self.pos += 1
-                            return Ref(num, gen)
-            except LexError:
-                pass
-            self.pos = save
+            m = _REF_TAIL_RE.match(self.data, self.pos)
+            if m is not None:
+                try:
+                    gen = _number(m.group(1))
+                except LexError:
+                    return num
+                if isinstance(gen, int):
+                    self.pos = m.end()
+                    return Ref(num, gen)
         return num
 
     def read_number(self) -> Any:
         raw = self._read_regular_run()
         if not raw:
             raise LexError(f"expected number at {self.pos}")
-        try:
-            if b"." in raw or b"e" in raw or b"E" in raw:
-                return float(raw)
-            return int(raw)
-        except ValueError:
-            # PDF tolerates things like '--5' or '.'; salvage leading number
-            try:
-                return float(raw.replace(b"--", b"-"))
-            except ValueError:
-                raise LexError(f"bad number token {raw!r}") from None
+        return _number(raw)
 
     def expect_keyword(self, kw: bytes) -> None:
         self.skip_ws()
@@ -358,60 +373,71 @@ class Lexer:
             raise LexError(f"expected {kw!r}, got {got!r} at {self.pos}")
 
 
-class Keyword(bytes):
-    """A bare keyword token (content-stream operator or ``obj`` etc.)."""
-
-    __slots__ = ()
+def _unhex(digits: bytes) -> bytes:
+    digits = digits.translate(None, WHITESPACE)
+    if len(digits) % 2 == 1:
+        digits = digits + b"0"  # odd count: pad with '0'
+    return binascii.unhexlify(digits)
 
 
 def tokenize_content(data: bytes):
     """Yield tokens from a content stream: operands then Keyword operators.
 
     Content streams use plain COS syntax without indirect references
-    (ISO 32000-1 §7.8.2). Inline images (BI..EI) are skipped wholesale.
+    (ISO 32000-1 §7.8.2). Inline images (BI..EI) are skipped wholesale;
+    stray delimiter bytes are skipped.
     """
     lx = Lexer(data)
+    pos = 0
     while True:
-        lx.skip_ws()
-        if lx.pos >= lx.n:
-            return
-        b = lx.data[lx.pos]
-        if b in b"+-.0123456789":
-            yield lx.read_number()
-        elif b == 0x2F:
-            yield lx.read_name()
-        elif b == 0x28:
-            yield lx.read_literal_string()
-        elif b == 0x3C:
-            if lx.data[lx.pos : lx.pos + 2] == b"<<":
-                yield lx.read_dict()
+        for m in _TOKEN_RE.finditer(data, pos):
+            kind = m.lastgroup
+            if kind == "int":
+                yield int(m.group(kind))
+            elif kind == "kw":
+                kw = m.group(kind)
+                if kw in _KEYWORD_CONSTANTS:
+                    yield _KEYWORD_CONSTANTS[kw]
+                elif kw == b"BI":
+                    # inline image: skip to 'EI' delimited by whitespace
+                    ei = _EI_RE.search(data, m.end())
+                    pos = lx.n if ei is None else ei.end()
+                    break
+                else:
+                    yield Keyword(kw)
+            elif kind == "real":
+                yield float(m.group(kind))
+            elif kind == "name":
+                yield Name(m.group(kind).decode("latin-1"))
+            elif kind == "str":
+                yield m.group(kind)
+            elif kind == "hex":
+                yield _unhex(m.group(kind))
+            elif kind == "eof":
+                return
             else:
-                yield lx.read_hex_string()
-        elif b == 0x5B:
-            yield lx.read_array()
+                # a shape the master pattern leaves to the byte-level readers
+                lx.pos = start = m.start(kind)
+                b = data[start]
+                if b in _NUMBER_START:
+                    yield lx.read_number()
+                elif b == 0x2F:
+                    yield lx.read_name()
+                elif b == 0x28:
+                    yield lx.read_literal_string()
+                elif b == 0x3C:
+                    if data[start : start + 2] == b"<<":
+                        yield lx.read_dict()
+                    else:
+                        yield lx.read_hex_string()
+                elif b == 0x5B:
+                    yield lx.read_array()
+                else:
+                    lx.pos = start + 1  # skip stray delimiter byte
+                pos = lx.pos
+                break
         else:
-            kw = lx._read_regular_run()
-            if not kw:
-                lx.pos += 1  # skip stray delimiter byte
-                continue
-            if kw == b"BI":
-                # inline image: skip to 'EI' delimited by whitespace
-                idx = lx.data.find(b"EI", lx.pos)
-                while idx > 0 and not (
-                    is_ws(lx.data[idx - 1])
-                    and (idx + 2 >= lx.n or is_ws(lx.data[idx + 2]) or idx + 2 == lx.n)
-                ):
-                    idx = lx.data.find(b"EI", idx + 2)
-                lx.pos = lx.n if idx < 0 else idx + 2
-                continue
-            if kw == b"true":
-                yield True
-            elif kw == b"false":
-                yield False
-            elif kw == b"null":
-                yield None
-            else:
-                yield Keyword(kw)
+            return
 
 
 def parse_object_at(data: bytes, offset: int) -> Tuple[int, int, Any]:
@@ -428,21 +454,3 @@ def parse_object_at(data: bytes, offset: int) -> Tuple[int, int, Any]:
     lx.expect_keyword(b"obj")
     val = lx.read_object()
     return int(num), int(gen), val
-
-
-def resolve_stream_length(stream: StreamObj, resolver) -> StreamObj:
-    """Re-slice a stream whose /Length was an indirect reference."""
-    length = stream.dict.get("Length")
-    if isinstance(length, Ref):
-        real = resolver(length)
-        if isinstance(real, int) and real <= len(stream.raw):
-            return StreamObj(stream.dict, stream.raw[:real])
-    return stream
-
-
-def read_object_with_resolver(data: bytes, offset: int, resolver) -> Tuple[int, int, Any]:
-    """Like :func:`parse_object_at` but fixes indirect /Length streams."""
-    num, gen, val = parse_object_at(data, offset)
-    if isinstance(val, StreamObj):
-        val = resolve_stream_length(val, resolver)
-    return num, gen, val

@@ -16,6 +16,9 @@ this observable behavior; ``False`` checks the real key.
 
 from __future__ import annotations
 
+from functools import lru_cache
+from typing import Tuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -107,8 +110,14 @@ def validation_errors(mode: str = "typed", strict_quirk: bool = True) -> Column:
     return F.flatten(F.array(*errs))
 
 
+@lru_cache(maxsize=None)
+def _validation_columns(mode: str, strict_quirk: bool) -> Tuple[Column, Column]:
+    """(validation_errors, is_valid), built once per process per
+    (mode, strict_quirk): Columns are immutable and rebuilding the
+    battery costs hundreds of py4j round trips per call."""
+    return validation_errors(mode, strict_quirk), F.size(F.col("validation_errors")) == 0
+
+
 def with_validation(records: DataFrame, mode: str = "typed", strict_quirk: bool = True) -> DataFrame:
-    errs = validation_errors(mode, strict_quirk)
-    return records.withColumn("validation_errors", errs).withColumn(
-        "is_valid", F.size(F.col("validation_errors")) == 0
-    )
+    errs, is_valid = _validation_columns(mode, strict_quirk)
+    return records.withColumn("validation_errors", errs).withColumn("is_valid", is_valid)

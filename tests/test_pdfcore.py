@@ -714,3 +714,164 @@ def test_truetype_cmap_format12_and_post_format1():
     # no post at all: unicode-typed (3,10) falls back to chr(code)
     m2 = truetype_tounicode(sfnt([(b"cmap", cmap)]))
     assert m2 == {0x41: "A", 0x42: "B", 0x43: "C"}
+
+
+@pytest.mark.parametrize("enc_off,expected", [(0, {65: "A", 66: "B"}), (1, None)])
+def test_cff_predefined_expert_encoding_gated(enc_off, expected):
+    """Hand-built known answer: charset format 0 names gids 1, 2 by the
+    standard SIDs 34, 35 ('A', 'B'). Under the predefined Standard
+    encoding (Top DICT Encoding offset 0) codes 65, 66 reach them. The
+    predefined Expert encoding (offset 1) maps codes to expert glyphs,
+    so decoding it through the Standard table would give WRONG text:
+    it must yield None (standard-table fallback)."""
+    import struct
+
+    from pdf_parser_spark.pdfcore.fontprog import cff_tounicode
+    from pdf_parser_spark.synth.fontgen import _cff_index_bytes
+
+    def op(val, operator):
+        return struct.pack(">Bi", 29, val) + bytes([operator])
+
+    name_index = _cff_index_bytes([b"ExpertCFF"])
+    empty_index = _cff_index_bytes([])  # String INDEX and Global Subr INDEX
+    charset = bytes([0]) + struct.pack(">HH", 34, 35)
+    charstrings = _cff_index_bytes([b"\x0e"] * 3)
+    topdict_index_size = 2 + 1 + 4 + 18
+    cs_off = 4 + len(name_index) + topdict_index_size + 2 * len(empty_index)
+    chs_off = cs_off + len(charset)
+    top_index = _cff_index_bytes([op(cs_off, 15) + op(enc_off, 16) + op(chs_off, 17)])
+    assert len(top_index) == topdict_index_size
+    blob = (bytes([1, 0, 4, 2]) + name_index + top_index + empty_index + empty_index
+            + charset + charstrings)
+    assert cff_tounicode(blob) == expected
+
+
+# ----------------------------------------------------------------------
+# CMap memo and per-document font decoder reuse
+# ----------------------------------------------------------------------
+def _assemble(objects) -> bytes:
+    """Objects 1..n (1 = catalog) → a PDF with a classic xref table."""
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objects, start=1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objects) + 1)
+    for off in offsets:
+        out += b"%010d 00000 n \n" % off
+    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objects) + 1, xref)
+    return bytes(out)
+
+
+def _stream(data: bytes) -> bytes:
+    return b"<< /Length %d >>\nstream\n" % len(data) + data + b"\nendstream"
+
+
+def _tounicode_cmap(pairs) -> bytes:
+    """A bfchar ToUnicode CMap: 1-byte code → one BMP character."""
+    chars = b"\n".join(b"<%02X> <%04X>" % (code, ord(ch)) for code, ch in pairs)
+    return (b"begincmap\n1 begincodespacerange\n<00> <FF>\nendcodespacerange\n"
+            b"%d beginbfchar\n" % len(pairs) + chars + b"\nendbfchar\nendcmap")
+
+
+def _one_font_pdf(cmap: bytes, n_pages: int = 2) -> bytes:
+    """n pages sharing font F1 (by reference) whose /ToUnicode is ``cmap``;
+    each page shows codes <01 02>."""
+    content = b"BT /F1 12 Tf 72 700 Td <0102> Tj ET"
+    first_page = 5
+    kids = b" ".join(b"%d 0 R" % (first_page + 2 * k) for k in range(n_pages))
+    objects = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages,
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Custom /ToUnicode 4 0 R >>",
+        _stream(cmap),
+    ]
+    for k in range(n_pages):
+        objects.append(b"<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 3 0 R >> >> "
+                       b"/Contents %d 0 R >>" % (first_page + 2 * k + 1))
+        objects.append(_stream(content))
+    return _assemble(objects)
+
+
+def test_distinct_tounicode_cmaps_back_to_back():
+    """Two documents whose ToUnicode CMaps differ map the same codes to
+    different text; parsed back to back (and again) in one process,
+    each keeps its own golden text — the memo keys on content."""
+    doc_ab = _one_font_pdf(_tounicode_cmap([(1, "A"), (2, "B")]))
+    doc_xy = _one_font_pdf(_tounicode_cmap([(1, "X"), (2, "Y")]))
+    for blob, golden in ((doc_ab, "AB\fAB"), (doc_xy, "XY\fXY"), (doc_ab, "AB\fAB")):
+        assert parse_pdf(blob).text() == golden
+
+
+def test_cmap_memo_is_bounded():
+    from pdf_parser_spark.pdfcore import cmap
+
+    for k in range(300):
+        cm = cmap.ToUnicodeCMap.parse(_tounicode_cmap([(1, chr(0x4E00 + k))]))
+        assert cm.decode(b"\x01") == chr(0x4E00 + k)
+        assert len(cmap._memo) <= 256
+    assert len(cmap._memo) <= 256
+
+
+def test_shared_font_decoder_built_once_per_document(monkeypatch):
+    from pdf_parser_spark.pdfcore import document
+
+    built = []
+    real = document._build_decoder
+
+    def counting(store, fd):
+        built.append(fd)
+        return real(store, fd)
+
+    monkeypatch.setattr(document, "_build_decoder", counting)
+    blob = _one_font_pdf(_tounicode_cmap([(1, "Q"), (2, "R")]), n_pages=5)
+    assert parse_pdf(blob).text() == "\f".join(["QR"] * 5)
+    assert len(built) == 1  # one font dict, five pages
+    parse_pdf(blob)
+    assert len(built) == 2  # the cache lives for one parse_pdf call only
+
+
+def test_inline_font_dicts_per_page_decode_separately():
+    """Pages carrying their own inline /Resources font dicts (no shared
+    refs), all named F1 but with different encodings, decode each with
+    its own dict: reuse must never cross dictionaries."""
+    def page(font: bytes, contents: int) -> bytes:
+        return (b"<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 " + font
+                + b" >> >> /Contents %d 0 R >>" % contents)
+
+    swapped = b"<< /Type /Font /Subtype /Type1 /Encoding << /Differences [65 /B /A] >> >>"
+    plain = b"<< /Type /Font /Subtype /Type1 /Encoding /WinAnsiEncoding >>"
+    objects = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R 4 0 R 5 0 R] /Count 3 >>",
+        page(swapped, 6),
+        page(plain, 6),
+        page(swapped, 6),
+        _stream(b"BT /F1 12 Tf 72 700 Td (AB\x80) Tj ET"),
+    ]
+    # page 1/3: Differences over StandardEncoding (no 0x80 there → U+FFFD);
+    # page 2: WinAnsi (0x80 = Euro)
+    assert parse_pdf(_assemble(objects)).text() == "BA�\fAB€\fBA�"
+
+
+@pytest.mark.parametrize("enc", [
+    {"r": 3, "length": 128}, {"r": 2, "length": 40}, {"mode": "aesv2"},
+    {"mode": "aesv3", "r": 6},
+])
+def test_encrypted_multipage_shared_fonts_decode(enc):
+    """attach_crypt clears the object cache before any font dict is
+    resolved, so decoders reused across pages are built from decrypted
+    objects: every page stays byte-identical to the generator goldens."""
+    b = PdfBuilder(compress=True, encrypt_rc4=enc,
+                   embedded_fonts={"tt_style": "mac0", "t1_flavor": "cff"})
+    for p in range(3):
+        pg = b.new_page()
+        pg.text(72, 720, f"Encrypted page {p + 1}")
+        pg.text(72, 700, f"Euro € and ﬁ {p}", font="F2")
+        pg.text(72, 680, f"TrueType € {p}", font="F3")
+        pg.text(72, 660, f"CFF € {p}", font="F4")
+    doc = parse_pdf(b.build(), decrypt=True)
+    assert doc.decrypted
+    assert doc.text() == b.golden_doc_text()
